@@ -1,0 +1,1 @@
+"""StreamDS end-to-end and per-layer benchmark (see README.md)."""
