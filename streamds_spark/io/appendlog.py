@@ -73,7 +73,14 @@ def append_batch(df: DataFrame, path: str, client_id: str, batch_id: int) -> Non
     DETERMINISTIC per-batch directory (overwrite mode), so a replayed batch —
     Structured Streaming's at-least-once redelivery after a crash — rewrites
     the same dir instead of duplicating rows. _seq = batch_id keeps the
-    client's batch order; readers skip the dir until its _SUCCESS commits."""
+    client's batch order; readers skip the dir until its _SUCCESS commits.
+
+    Visibility caveat for CONCURRENT readers: overwrite mode deletes the dir
+    (and its _SUCCESS) before rewriting it, so while a batch is replayed a
+    reader listing the log sees that batch briefly absent, then back once
+    the rewrite commits. The dir name `batch-<client>-<bid:09d>` is the
+    log's one streaming-append format (max_batch_id parses it; merge keys
+    it as `dir:<name>`)."""
     chunk = (
         df.withColumn("_client", F.lit(client_id))
         .withColumn("_seq", F.lit(int(batch_id)).cast("long"))
@@ -81,59 +88,6 @@ def append_batch(df: DataFrame, path: str, client_id: str, batch_id: int) -> Non
     )
     dest = os.path.join(path, "chunks", f"batch-{client_id}-{int(batch_id):09d}")
     chunk.write.mode("overwrite").parquet(dest)
-
-
-def append_batch_txn(df: DataFrame, path: str, client_id: str, batch_id: int) -> None:
-    """Transactional APPEND for streaming micro-batches — the pointer-commit
-    variant of append_batch for logs with CONCURRENT readers.
-
-    append_batch's overwrite mode has a visibility window: a replayed batch
-    deletes the dir (and its _SUCCESS) before rewriting, so a reader landing
-    mid-rewrite sees the batch vanish and reappear. Here the data lands in a
-    hidden attempt dir (`chunks/.txn-<client>-<bid>-<uuid>`, invisible to
-    every reader scan), and the batch becomes visible only when a pointer
-    file (`chunks/txnptr-<client>-<bid>`) is os.replace'd onto it — atomic on
-    POSIX, same discipline as the generation CURRENT pointer. A replay writes
-    a NEW attempt dir and swings the same pointer: readers see the old
-    attempt or the new one, never a partial dir and never neither.
-    """
-    seq = int(batch_id)
-    chunk = (
-        df.withColumn("_client", F.lit(client_id))
-        .withColumn("_seq", F.lit(seq).cast("long"))
-        .withColumn("_pos", F.monotonically_increasing_id())
-    )
-    chunks_root = os.path.join(path, "chunks")
-    attempt = f".txn-{client_id}-{seq:09d}-{uuid.uuid4().hex[:8]}"
-    chunk.write.mode("overwrite").parquet(os.path.join(chunks_root, attempt))
-    ptr = os.path.join(chunks_root, f"txnptr-{client_id}-{seq:09d}")
-    tmp = ptr + f".tmp-{uuid.uuid4().hex[:6]}"
-    with open(tmp, "w") as f:
-        f.write(attempt)
-    os.replace(tmp, ptr)  # commit point
-    # The superseded attempt dir (if any) is NOT reclaimed here: a concurrent
-    # reader that already resolved the pointer to the old attempt may not have
-    # opened its files yet (Spark lists lazily), and deleting at commit time
-    # reopens exactly the visibility race this variant exists to close. The
-    # old dir is unreachable through the pointer from now on; merge() — the
-    # single-writer maintenance pass — reclaims superseded attempts.
-
-
-def _txn_pointers(chunks_root: str) -> list[tuple[str, str]]:
-    """Committed (pointer_name, attempt_dir_abspath) pairs. A pointer whose
-    attempt dir lacks _SUCCESS is impossible via append_batch_txn (the write
-    commits before the pointer swings) — skipped defensively for torn
-    storage, mirroring _current_generation."""
-    out = []
-    for ptr in sorted(_glob.glob(os.path.join(chunks_root, "txnptr-*"))):
-        if ".tmp-" in os.path.basename(ptr):
-            continue  # orphaned pre-commit pointer temp (crash before replace)
-        with open(ptr) as f:
-            attempt = f.read().strip()
-        d = os.path.join(chunks_root, attempt)
-        if os.path.exists(os.path.join(d, "_SUCCESS")):
-            out.append((os.path.basename(ptr), d))
-    return out
 
 
 def _current_generation(path: str) -> str | None:
@@ -175,7 +129,6 @@ def _live_chunk_files(path: str, gen_dir: str | None) -> list[str]:
     collide."""
     merged = _merged_chunk_names(gen_dir)
     merged_dirs = {m[len("dir:") :] for m in merged if m.startswith("dir:")}
-    merged_txn = {m[len("txn:") :] for m in merged if m.startswith("txn:")}
     chunks_root = os.path.join(path, "chunks")
     out = []
     for p in _glob.glob(os.path.join(chunks_root, "**", "*.parquet"), recursive=True):
@@ -188,13 +141,31 @@ def _live_chunk_files(path: str, gen_dir: str | None) -> list[str]:
             continue  # whole batch dir already folded in (even if replayed)
         if rel not in merged:
             out.append(p)
-    # transactional batches: hidden attempt dirs (dot-prefixed — the glob
-    # above never matches them) become visible only through their pointer
-    for ptr_name, attempt_dir in _txn_pointers(chunks_root):
-        if ptr_name in merged_txn:
-            continue  # batch folded into the generation (even if replayed)
-        out.extend(_glob.glob(os.path.join(attempt_dir, "*.parquet")))
     return sorted(out)
+
+
+def max_batch_id(path: str) -> int:
+    """Highest streaming batch id (append_batch) whose rows can be in the
+    log right now, -1 if none: parsed from the live `batch-<client>-<bid>`
+    dir names under chunks/ and the live generation's `dir:batch-...`
+    manifest lines (batches a merge folded in and GC may have reclaimed).
+    A torn dir counts too — its rows are on their way in."""
+    names: set[str] = set()
+    chunks_root = os.path.join(path, "chunks")
+    if os.path.isdir(chunks_root):
+        names.update(os.listdir(chunks_root))
+    names.update(
+        m[len("dir:") :]
+        for m in _merged_chunk_names(_current_generation(path))
+        if m.startswith("dir:")
+    )
+    best = -1
+    for name in names:
+        if name.startswith("batch-"):
+            tail = name.rsplit("-", 1)[-1]
+            if tail.isdigit():
+                best = max(best, int(tail))
+    return best
 
 
 def delete_keys(
@@ -247,7 +218,6 @@ def file_logical_identity(file_path: str) -> tuple[str, list[str]] | None:
 
       chunks/<file>                      → its path relative to chunks/
       chunks/<batchdir>/<file>           → 'dir:<batchdir>'
-      chunks/.txn-<c>-<seq>-<uuid>/<f>   → 'txn:txnptr-<c>-<seq>'
       generations/<g>/data/<file>        → that generation's manifest lines
                                            (the chunks it folded in — a
                                            generation is immutable, so its
@@ -270,9 +240,6 @@ def file_logical_identity(file_path: str) -> tuple[str, list[str]] | None:
         if marker == "chunks":
             rel = os.sep.join(parts[i + 1 :])
             parent = os.path.dirname(rel)
-            if parent.startswith(".txn-"):
-                client_seq = parent[len(".txn-") :].rsplit("-", 1)[0]
-                return root, ["txn:txnptr-" + client_seq]
             if parent:
                 return root, ["dir:" + parent]
             return root, [rel]
@@ -364,13 +331,7 @@ def merge(
     for p in snapshot:
         rel = os.path.relpath(p, chunks_root)
         parent = os.path.dirname(rel)
-        if parent and parent.startswith(".txn-"):
-            # transactional batch: subsume by POINTER NAME — a post-merge
-            # replay writes a fresh attempt dir under the same pointer, and
-            # only the pointer identity survives that rewrite
-            client_seq = parent[len(".txn-") :].rsplit("-", 1)[0]
-            new_entries.add("txn:txnptr-" + client_seq)
-        elif parent:
+        if parent:
             # streaming batch dir: subsume the DIR, not its part filenames —
             # a post-merge replay rewrites the dir with new random filenames,
             # and the dir key keeps that rewrite out of every future read
@@ -407,7 +368,6 @@ def merge(
     # stay on disk until the next merge pass.
     grace_files = {m for m in prev_merged if ":" not in m}
     grace_dirs = {m[len("dir:") :] for m in prev_merged if m.startswith("dir:")}
-    grace_txn = {m[len("txn:") :] for m in prev_merged if m.startswith("txn:")}
     for rel in grace_files:
         try:
             os.remove(os.path.join(chunks_root, rel))
@@ -415,31 +375,6 @@ def merge(
             pass
     for d in grace_dirs:
         shutil.rmtree(os.path.join(chunks_root, d), ignore_errors=True)
-    ptr_target: dict[str, str] = {}
-    for ptr in _glob.glob(os.path.join(chunks_root, "txnptr-*")):
-        if ".tmp-" in os.path.basename(ptr):
-            continue
-        with open(ptr) as f:
-            ptr_target[os.path.basename(ptr)] = f.read().strip()
-    for ptr_name, attempt_dir in _txn_pointers(chunks_root):
-        if ptr_name in grace_txn:
-            shutil.rmtree(attempt_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(chunks_root, ptr_name))
-            except OSError:
-                pass
-    # superseded txn attempts: a replay swung its pointer to a new attempt and
-    # left the old dir behind (append_batch_txn defers reclaim to THIS
-    # single-writer pass so commit never races a reader). Reclaim an attempt
-    # when its pointer targets a different dir (unreachable through the
-    # pointer for every reader) OR its batch aged through the grace period;
-    # an attempt with NO pointer ever recorded is a commit in flight — kept.
-    for d in _glob.glob(os.path.join(chunks_root, ".txn-*")):
-        name = os.path.basename(d)
-        ptr_name = "txnptr-" + name[len(".txn-") :].rsplit("-", 1)[0]
-        tgt = ptr_target.get(ptr_name)
-        if (tgt is not None and tgt != name) or ptr_name in grace_txn:
-            shutil.rmtree(d, ignore_errors=True)
     for stale in list_generations(path)[: -max(1, keep_generations)]:
         shutil.rmtree(os.path.join(path, "generations", stale), ignore_errors=True)
     # tombstone GC: only dirs this fold APPLIED (the pre-rewrite snapshot)

@@ -10,7 +10,7 @@ Fingerprint = sha256 of
     changes invalidate without any notification channel — EXCEPT files that
     live inside an append-log table (io/appendlog.py), which are keyed on
     the log's LOGICAL batch identities instead: the union of committed
-    batch/txn/chunk identities is invariant under merge/compaction (the
+    batch-dir/chunk identities is invariant under merge/compaction (the
     rewrite changes files, not results, so the cache survives it) and gains
     a member on any genuine append (which correctly misses). Object-store
     deployments get the same win: manifest identity needs no stat()/mtime

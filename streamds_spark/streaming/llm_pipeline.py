@@ -1071,43 +1071,6 @@ def _bump_sample_erosion(sample_store: str, n: int) -> None:
     os.replace(tmp, os.path.join(sample_store, _EROSION_FILE))
 
 
-def _corpus_max_batch(paths: CorpusStreamPaths) -> int:
-    """Highest batch id whose rows can be in the corpus appendlog right now:
-    parsed from live chunk names (batch-N dirs / txn pointers) and the live
-    generation's manifest (dir:batch-N / txn:txnptr-client-N lines). This is
-    the honest frontier of a REBUILD's input — it can exceed the checkpoint's
-    durable frontier when an in-flight batch has appended but not yet
-    committed, and a rebuilt segment must dominate that batch's store dir or
-    its later replay-rewrite would double-count."""
-    best = -1
-    root = paths.corpus
-    names: set[str] = set()
-    chunks_root = os.path.join(root, "chunks")
-    if os.path.isdir(chunks_root):
-        names.update(os.listdir(chunks_root))
-    gen = appendlog._current_generation(root)  # noqa: SLF001 — same package
-    if gen is not None:
-        try:
-            with open(os.path.join(gen, "merged_chunks.txt")) as f:
-                for line in f:
-                    entry = line.strip()
-                    if entry.startswith("dir:"):
-                        names.add(entry[len("dir:") :])
-                    elif entry.startswith("txn:"):
-                        names.add(entry[len("txn:") :])
-        except OSError:
-            pass
-    for name in names:
-        # batch-<client>-<bid:09d> dirs (append_batch) and
-        # txnptr-<client>-<bid> pointers (append_batch_txn) both end in the
-        # batch id after the last dash
-        if name.startswith(("batch-", "txnptr-", ".txn-")):
-            tail = name.rsplit("-", 1)[-1]
-            if tail.isdigit():
-                best = max(best, int(tail))
-    return best
-
-
 def delete_docs(
     spark: SparkSession, work_dir: str, doc_ids, quiesced: bool = False
 ) -> dict:
@@ -1282,8 +1245,11 @@ def rebuild_sketch_stores(spark: SparkSession, work_dir: str) -> dict:
     the HDR doc-length registers, and the bottom-k sample — from the
     post-takedown corpus appendlog (whose reads already exclude tombstoned
     docs). Each store is rewritten as one `segment=<hi>` where hi is the
-    corpus's own batch frontier (_corpus_max_batch): a later replay of any
-    batch <= hi rewrites a dir readers skip, so nothing double-counts.
+    corpus's own batch frontier (appendlog.max_batch_id): a later replay of
+    any batch <= hi rewrites a dir readers skip, so nothing double-counts.
+    That frontier can exceed the checkpoint's durable one when an in-flight
+    batch has appended but not yet committed, and the rebuilt segment must
+    dominate that batch's store dir or its replay would double-count.
 
     The rebuilt sketches EQUAL one-pass batch sketches over the remaining
     corpus (same register constructions as process_corpus_batch), and the
@@ -1296,7 +1262,7 @@ def rebuild_sketch_stores(spark: SparkSession, work_dir: str) -> dict:
     from streamds_spark.operators.sampling import bottomk_sample
 
     paths = CorpusStreamPaths(work_dir)
-    hi = _corpus_max_batch(paths)
+    hi = appendlog.max_batch_id(paths.corpus)
     if hi < 0:
         return {"segment_hi": -1, "rebuilt": []}
     corpus = appendlog.get(spark, paths.corpus).localCheckpoint(eager=False)

@@ -3,8 +3,6 @@ user-semantics parity)."""
 
 from __future__ import annotations
 
-import glob as _glob
-
 from streamds_spark.io import appendlog
 
 
@@ -169,61 +167,26 @@ def test_append_batch_replay_after_merge_noops(spark, tmp_path):
     ]
 
 
-def test_txn_append_reader_during_crash_window(spark, tmp_path):
-    """append_batch_txn's visibility contract, probed DURING simulated crash
-    windows: a reader concurrent with (a) a first-attempt write that dies
-    before the pointer swing, (b) a replay rewrite that dies mid-write, and
-    (c) a completed replay, must see — respectively — nothing, the OLD
-    committed attempt, and the new attempt. Never a partial dir, never a
-    vanished batch (the window append_batch's delete-then-rewrite has)."""
+def test_max_batch_id_reads_live_dirs_and_merged_manifest(spark, tmp_path):
+    """max_batch_id: -1 for an empty log; live batch-<client>-<bid> dirs
+    count; a batch id that survives only in a merged generation's manifest
+    (its dir reclaimed by merge GC) still counts."""
     import os
 
     path = str(tmp_path / "log")
     appendlog.create(spark, path)
-    chunks = os.path.join(path, "chunks")
-
-    # (a) batch 0's first attempt crashed mid-write: attempt dir with torn
-    # bytes, pointer never swung → the log reads as empty-of-batches
-    torn = os.path.join(chunks, ".txn-s1-000000000-deadbeef")
-    os.makedirs(torn)
-    with open(os.path.join(torn, "part-junk.parquet"), "wb") as f:
-        f.write(b"\x00torn")
-    assert appendlog._live_chunk_files(path, None) == []
-
-    # recovery: the replayed batch 0 commits
-    df = spark.createDataFrame([("a",), ("b",)], ["line"])
-    appendlog.append_batch_txn(df, path, "s1", 0)
-    assert sorted(r["line"] for r in appendlog.get(spark, path).collect()) == ["a", "b"]
-
-    # (b) a SECOND replay of batch 0 crashes mid-write (new attempt dir, torn,
-    # pointer still on the committed attempt) → reader sees the old data,
-    # exactly once — the batch never vanishes mid-rewrite
-    torn2 = os.path.join(chunks, ".txn-s1-000000000-feedface")
-    os.makedirs(torn2)
-    with open(os.path.join(torn2, "part-junk.parquet"), "wb") as f:
-        f.write(b"\x00torn again")
-    assert sorted(r["line"] for r in appendlog.get(spark, path).collect()) == ["a", "b"]
-
-    # (c) the replay completes: pointer swings atomically, still exactly once
-    appendlog.append_batch_txn(df, path, "s1", 0)
-    appendlog.append_batch_txn(spark.createDataFrame([("c",)], ["line"]), path, "s1", 1)
-    assert [r["line"] for r in appendlog.read_ordered(spark, path).collect()] == [
-        "a", "b", "c",
-    ]
-
-    # merge folds txn batches by pointer identity; a post-merge replay of
-    # batch 1 (fresh attempt dir, same pointer) stays invisible
+    assert appendlog.max_batch_id(path) == -1
+    df = spark.createDataFrame([("a",)], ["line"])
+    appendlog.append(df, path, "plain")  # not a streaming batch
+    appendlog.append_batch(df, path, "s1", 0)
+    appendlog.append_batch(df, path, "s1", 7)
+    assert appendlog.max_batch_id(path) == 7
     appendlog.merge(spark, path)
-    appendlog.append_batch_txn(spark.createDataFrame([("c",)], ["line"]), path, "s1", 1)
-    assert [r["line"] for r in appendlog.read_ordered(spark, path).collect()] == [
-        "a", "b", "c",
+    appendlog.merge(spark, path)  # the second merge reclaims the folded dirs
+    assert not [
+        d for d in os.listdir(os.path.join(path, "chunks")) if d.startswith("batch-")
     ]
-    appendlog.merge(spark, path)
-    assert [r["line"] for r in appendlog.read_ordered(spark, path).collect()] == [
-        "a", "b", "c",
-    ]
-    assert not _glob.glob(os.path.join(chunks, "txnptr-*")), "pointers reclaimed"
-
+    assert appendlog.max_batch_id(path) == 7
 
 def test_streaming_into_appendlog_sink(spark, tmp_path):
     """End-to-end: a streaming wordcount lands in the append-log store via
@@ -323,64 +286,3 @@ def test_merge_gc_grace_period_protects_inflight_readers(spark, tmp_path):
         r["line"] for r in appendlog.get(spark, path).collect()
     ) == ["r0", "r1", "r2"]
 
-
-def test_txn_superseded_attempt_deferred_to_merge(spark, tmp_path):
-    """A replayed txn batch leaves its superseded attempt dir on disk (commit
-    never deletes — a concurrent reader may still hold the old resolution);
-    merge(), the single-writer maintenance pass, reclaims it."""
-    import os
-
-    path = str(tmp_path / "log")
-    appendlog.create(spark, path)
-    appendlog.append_batch_txn(
-        spark.createDataFrame([("old",)], ["line"]), path, "c", 0
-    )
-    appendlog.append_batch_txn(
-        spark.createDataFrame([("new1",), ("new2",)], ["line"]), path, "c", 0
-    )
-    attempts = _glob.glob(str(tmp_path / "log" / "chunks" / ".txn-c-*"))
-    assert len(attempts) == 2  # superseded attempt retained at commit time
-    # readers resolve the pointer: only the replayed content is visible
-    assert sorted(r["line"] for r in appendlog.get(spark, path).collect()) == [
-        "new1",
-        "new2",
-    ]
-    appendlog.merge(spark, path)
-    # the SUPERSEDED attempt is reclaimed immediately (no pointer reaches
-    # it); the committed attempt just folded into the generation ages one
-    # GC grace cycle so a reader that listed against the pre-merge view can
-    # finish its scan — the NEXT merge reclaims it
-    left = _glob.glob(str(tmp_path / "log" / "chunks" / ".txn-c-*"))
-    with open(str(tmp_path / "log" / "chunks" / "txnptr-c-000000000")) as f:
-        committed = f.read().strip()
-    assert [os.path.basename(d) for d in left] == [committed]
-    assert sorted(r["line"] for r in appendlog.get(spark, path).collect()) == [
-        "new1",
-        "new2",
-    ]
-    appendlog.merge(spark, path)
-    assert _glob.glob(str(tmp_path / "log" / "chunks" / ".txn-c-*")) == []
-    assert sorted(r["line"] for r in appendlog.get(spark, path).collect()) == [
-        "new1",
-        "new2",
-    ]
-
-
-def test_txn_inflight_attempt_survives_merge(spark, tmp_path):
-    """An attempt dir with no committed pointer (a commit in flight) must NOT
-    be reclaimed by merge."""
-    import os
-
-    path = str(tmp_path / "log")
-    appendlog.create(spark, path)
-    appendlog.append_batch_txn(
-        spark.createDataFrame([("a",)], ["line"]), path, "c", 0
-    )
-    # simulate a writer that has landed its attempt but not yet swung the
-    # pointer: a bare attempt dir with no txnptr
-    inflight = str(tmp_path / "log" / "chunks" / ".txn-d-000000007-deadbeef")
-    spark.createDataFrame([("pending",)], ["line"]).write.parquet(inflight)
-    appendlog.merge(spark, path)
-    assert os.path.isdir(inflight)  # kept: its commit may still land
-    # and it stays invisible to readers until its pointer commits
-    assert sorted(r["line"] for r in appendlog.get(spark, path).collect()) == ["a"]

@@ -61,8 +61,6 @@ _OPS = st.lists(
     st.one_of(
         st.tuples(st.just("append"), st.integers(1, 3)),
         st.tuples(st.just("batch"), st.integers(0, 3)),
-        st.tuples(st.just("txn"), st.integers(0, 3)),
-        st.tuples(st.just("replay_txn"), st.integers(0, 3)),
         st.tuples(st.just("merge"), st.just(0)),
     ),
     min_size=1,
@@ -75,18 +73,17 @@ _OPS = st.lists(
 @given(ops=_OPS)
 @pytest.mark.slow
 def test_appendlog_ledger_model(spark, ops, tmp_path_factory):
-    """Whatever the interleaving of plain appends, batch appends, txn appends,
-    txn REPLAYS (which supersede their batch's earlier content), and merges:
-    get() returns exactly the ledger the model predicts, and the resultcache
-    fingerprint of a fixed query changes IFF the ledger content changed
-    (merges never change it)."""
+    """Whatever the interleaving of plain appends, batch appends (a repeated
+    batch id is a replay), and merges: get() returns exactly the ledger the
+    model predicts, and the resultcache fingerprint of a fixed query changes
+    IFF the ledger content changed (merges never change it)."""
     from streamds_spark.io import appendlog
     from streamds_spark.io.resultcache import plan_fingerprint
 
     path = str(tmp_path_factory.mktemp("alog") / "log")
     appendlog.create(spark, path)
     ledger: dict = {}  # key -> list of lines (plain appends under key 'plain')
-    merged_ids: set = set()  # batch/txn keys folded into a generation: a
+    merged_ids: set = set()  # batch keys folded into a generation: a
     # later append/replay under the SAME id is by contract a REPLAY of
     # already-delivered content — the manifest subsumes it and readers
     # never see it (exactly-once), so the model must not take new content
@@ -122,20 +119,6 @@ def test_appendlog_ledger_model(spark, ops, tmp_path_factory):
             )
             if f"batch-{arg}" not in merged_ids:
                 ledger[f"batch-{arg}"] = lines  # pre-merge replay overwrites
-        elif op == "txn":
-            lines = [f"t{arg}-{seq}-{j}" for j in range(2)]
-            appendlog.append_batch_txn(
-                spark.createDataFrame([(l,) for l in lines], ["line"]), path, "cT", arg
-            )
-            if f"txn-{arg}" not in merged_ids:
-                ledger[f"txn-{arg}"] = lines
-        elif op == "replay_txn":
-            lines = [f"r{arg}-{seq}"]
-            appendlog.append_batch_txn(
-                spark.createDataFrame([(l,) for l in lines], ["line"]), path, "cT", arg
-            )
-            if f"txn-{arg}" not in merged_ids:
-                ledger[f"txn-{arg}"] = lines  # supersedes the earlier attempt
         else:
             appendlog.merge(spark, path)
             # everything the merge folded is now replay-immune forever

@@ -196,7 +196,8 @@ def test_concurrent_miss_promotion_is_atomic(spark, tmp_path):
 def test_appendlog_manifest_keying_survives_compaction(spark, tmp_path):
     """Log-backed reads are keyed on the log's logical batch identities, so
     compaction (which rewrites every physical file) keeps the cache warm,
-    while a genuine append invalidates."""
+    a post-merge replay of a folded batch (its `dir:` identity already in
+    the manifest) keeps it warm too, while a genuine append invalidates."""
     from streamds_spark.io import appendlog
 
     log = str(tmp_path / "log")
@@ -205,8 +206,8 @@ def test_appendlog_manifest_keying_survives_compaction(spark, tmp_path):
     data = spark.createDataFrame(
         [(i, f"v{i % 4}") for i in range(20)], "id int, v string"
     )
-    appendlog.append_batch_txn(data, log, "c1", 0)
-    appendlog.append_batch_txn(data.filter("id >= 10"), log, "c1", 1)
+    appendlog.append_batch(data, log, "c1", 0)
+    appendlog.append_batch(data.filter("id >= 10"), log, "c1", 1)
 
     def q():
         return (
@@ -225,8 +226,15 @@ def test_appendlog_manifest_keying_survives_compaction(spark, tmp_path):
     assert c.hit and c.fingerprint == a.fingerprint
     assert {(r["v"], r["n"]) for r in c.df.collect()} == want
 
+    # a replay of batch 0 after the merge rewrites its dir with new part
+    # files; the dir: manifest key keeps it out of the read and the key
+    appendlog.append_batch(data, log, "c1", 0)
+    rp = cached(q(), cache)
+    assert rp.hit and rp.fingerprint == a.fingerprint
+    assert {(r["v"], r["n"]) for r in rp.df.collect()} == want
+
     # a genuine append is a new logical batch -> miss, then warm again
-    appendlog.append_batch_txn(data.filter("id < 3"), log, "c1", 2)
+    appendlog.append_batch(data.filter("id < 3"), log, "c1", 2)
     d = cached(q(), cache)
     assert not d.hit and d.fingerprint != a.fingerprint
     assert cached(q(), cache).hit

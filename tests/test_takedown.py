@@ -292,7 +292,7 @@ def test_appendlog_delete_and_merge_fold(spark, tmp_path):
     data = spark.createDataFrame(
         [(i, f"v{i}") for i in range(30)], "id int, v string"
     )
-    appendlog.append_batch_txn(data, log, "c1", 0)
+    appendlog.append_batch(data, log, "c1", 0)
     appendlog.merge(spark, log)  # generation exists -> get_at is testable
     gen0 = appendlog.list_generations(log)[-1]
 
@@ -328,7 +328,7 @@ def test_appendlog_delete_invalidates_result_cache(spark, tmp_path):
     data = spark.createDataFrame(
         [(i, f"v{i % 3}") for i in range(30)], "id int, v string"
     )
-    appendlog.append_batch_txn(data, log, "c1", 0)
+    appendlog.append_batch(data, log, "c1", 0)
 
     def q():
         return (

@@ -1,12 +1,15 @@
-"""Round-11 optimization measurement harness.
+"""Optimization measurement harness.
 
 For each named registry query (default: the bench HEADLINE set):
-  * dump .explain("formatted") to plans/r11/<name>_<tag>.txt
+  * dump .explain("formatted") to <plans_dir>/<name>_<tag>.txt
   * time count() min-of-N (the bench methodology) and the noop sink
     min-of-N (guide §1.4 — materializes every column, so plan-shape
     changes can't hide behind count()'s column pruning).
 
-Usage: python tools/r11_measure.py [--tag before|after] [--sf-dir D] [names...]
+Usage: python tools/measure.py <plans_dir> [--tag before|after] [--sf-dir D] [names...]
+
+plans_dir is where this round's plan dumps go (e.g. plans/r12); its basename
+labels the Spark job descriptions. --sf-dir defaults to $SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
@@ -43,18 +46,21 @@ HEADLINE = [
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("plans_dir")
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--no-plans", action="store_true")
     ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()
+    if not args.sf_dir:
+        ap.error("pass --sf-dir or set SPARK_GRAFT_SF_DIR")
 
     names = args.names or HEADLINE
     specs = load_all()
-    spark = get_spark("r11-measure")
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
-    os.makedirs(plans_dir, exist_ok=True)
+    label = os.path.basename(os.path.normpath(args.plans_dir))
+    spark = get_spark(f"{label}-measure")
+    os.makedirs(args.plans_dir, exist_ok=True)
 
     # warm-up (bench parity)
     spark.range(1).count()
@@ -69,16 +75,16 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
+            with open(os.path.join(args.plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(buf.getvalue())
         counts, noops = [], []
         for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"r11[{args.tag}] {name} count")
+            spark.sparkContext.setJobDescription(f"{label}[{args.tag}] {name} count")
             t0 = time.time()
             spec.fn(spark, args.sf_dir).count()
             counts.append(time.time() - t0)
         for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"r11[{args.tag}] {name} noop")
+            spark.sparkContext.setJobDescription(f"{label}[{args.tag}] {name} noop")
             t0 = time.time()
             spec.fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
             noops.append(time.time() - t0)
